@@ -205,24 +205,6 @@ def hashed_shingle_table(
     )
 
 
-def jaccard_for_pairs(
-    pairs: DataFrame, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs: two broadcast-or-hash
-    joins against the per-doc HASHED shingle sets, then pure integer array
-    math (|A∩B| / (|A|+|B|-|A∩B|) — the SQL oracle hashes identically)."""
-    sets = hashed_shingle_table(docs, text_col, id_col, shingle_n)
-    a = sets.select(F.col(id_col).alias("id_a"), F.col("hsh").alias("sh_a"))
-    b = sets.select(F.col(id_col).alias("id_b"), F.col("hsh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-    )
-
-
 # Frames pinned by pin_frame, oldest first. Spark's ContextCleaner only
 # reclaims dropped persisted blocks after a DRIVER JVM GC, which a
 # mostly-idle 16g heap may not run for hundreds of queries — measured: a

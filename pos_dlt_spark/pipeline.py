@@ -55,11 +55,15 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
+import weakref
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Callable, Literal
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
 
 from pos_dlt_spark.operators.cdc import ApplyChanges
 
@@ -1128,23 +1132,15 @@ class Pipeline:
             from pos_dlt_spark.sources.delta import read_delta
 
             df = read_delta(spark, self.table_path(name))
-            if (
-                flow is not None
-                and flow.stored_as_scd_type == 2
-                and "__tombstone" in df.columns
-            ):
-                # SCD2 tombstones are merge bookkeeping, not versions —
-                # same reader rule as ApplyChanges.read_target
-                from pyspark.sql import functions as F
-
-                df = df.filter(~F.col("__tombstone")).drop("__tombstone")
-            return df
-        df = spark.read.parquet(self.table_path(name))
+        else:
+            df = spark.read.parquet(self.table_path(name))
         if (
             flow is not None
             and flow.stored_as_scd_type == 2
             and "__tombstone" in df.columns
         ):
+            # SCD2 tombstones are merge bookkeeping, not versions —
+            # same reader rule as ApplyChanges.read_target
             from pyspark.sql import functions as F
 
             df = df.filter(~F.col("__tombstone")).drop("__tombstone")
@@ -1403,6 +1399,101 @@ class _EventLog:
         self.update_id = None
 
 
+# Every runner flow is a query named "pos_dlt:<pipeline>:<flow>" observing
+# these two names; _FlowTotals tracks only such queries and names.
+_FLOW_PREFIX = "pos_dlt:"
+_EXP_OBS = "__pos_dlt_expectations"
+_ROWS_OBS = "__pos_dlt_rows_out"
+_TERMINATED_WAIT_S = 60.0
+
+
+class _FlowTotals(StreamingQueryListener):
+    """Per-query sums of the runner's observed metrics over EVERY
+    micro-batch (``recentProgress`` keeps only the last 100). One per
+    session (:func:`_flow_totals`), as every listener sees every query
+    of its session; a query is tracked from its ``QueryStartedEvent``
+    (delivered before ``start()`` returns) when its name carries
+    ``_FLOW_PREFIX``. Delivery is asynchronous, so :meth:`take` waits
+    for the query's ``QueryTerminatedEvent``. Spark passes the raw JVM
+    events: pyspark's adapter converts a progress event field by field,
+    0.1-0.2 s of py4j round trips (measured on 4 cores) that every flow
+    would wait for, where one ``json()`` call carries all of it."""
+
+    class Java:
+        implements = ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]
+
+    def __init__(self) -> None:
+        self._cv = threading.Condition()
+        # query id -> observation name -> column -> total
+        self._sums: dict[str, dict[str, Counter]] = {}
+        self._done: set[str] = set()
+
+    @property
+    def _jlistener(self):
+        from pyspark import SparkContext
+
+        if not hasattr(self, "_jlistenerobj"):
+            self._jlistenerobj = SparkContext._jvm.PythonStreamingQueryListenerWrapper(self)
+        return self._jlistenerobj
+
+    def onQueryStarted(self, event) -> None:
+        if (event.name() or "").startswith(_FLOW_PREFIX):
+            with self._cv:
+                self._sums[event.id().toString()] = {}
+
+    def onQueryProgress(self, event) -> None:
+        p = json.loads(event.progress().json())
+        with self._cv:
+            sums = self._sums.get(p["id"])
+            if sums is None:
+                return
+            for name, row in p.get("observedMetrics", {}).items():
+                if name in (_EXP_OBS, _ROWS_OBS):
+                    sums.setdefault(name, Counter()).update(
+                        {k: int(v or 0) for k, v in row.items()}
+                    )
+
+    def onQueryTerminated(self, event) -> None:
+        qid = event.id().toString()
+        with self._cv:
+            if qid in self._sums:
+                self._done.add(qid)
+                self._cv.notify_all()
+
+    def take(self, query_id) -> dict[str, Counter]:
+        """Pop a finished query's totals; raise rather than return a
+        partial total when its terminated event does not arrive."""
+        qid = str(query_id)
+        with self._cv:
+            try:
+                if not self._cv.wait_for(
+                    lambda: qid in self._done, _TERMINATED_WAIT_S
+                ):
+                    raise RuntimeError(
+                        f"streaming query {qid}: no QueryTerminatedEvent in "
+                        f"{_TERMINATED_WAIT_S:.0f} s, its totals are incomplete"
+                    )
+                return self._sums[qid]
+            finally:
+                self._sums.pop(qid, None)
+                self._done.discard(qid)
+
+
+# weak keys: a session id() can be reused by a later session, a weak
+# reference to the session object cannot
+_SESSION_TOTALS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SESSION_TOTALS_LOCK = threading.Lock()
+
+
+def _flow_totals(spark: SparkSession) -> _FlowTotals:
+    with _SESSION_TOTALS_LOCK:
+        listener = _SESSION_TOTALS.get(spark)
+        if listener is None:
+            listener = _SESSION_TOTALS[spark] = _FlowTotals()
+            spark.streams.addListener(listener)
+        return listener
+
+
 class PipelineRunner:
     """Executes a Pipeline: live tables recompute in topo order; stream
     tables run an AvailableNow pass; CDC flows upsert their targets.
@@ -1411,8 +1502,8 @@ class PipelineRunner:
     ``DataFrame.observe`` — violation counts cost ZERO extra scans at any
     scale (an AggregatingAccumulator on the already-running plan), unlike
     a separate ``count()`` pass which would re-read the table. Metrics
-    land in :attr:`expectation_metrics` and are appended to
-    ``storage/_events/expectations.jsonl`` (the DLT event-log analogue).
+    land in :attr:`expectation_metrics` and as one ``expectation`` event
+    per constraint in :meth:`Pipeline.event_log`.
     """
 
     def __init__(self, pipeline: Pipeline) -> None:
@@ -1425,33 +1516,51 @@ class PipelineRunner:
     # -- expectations ------------------------------------------------------
 
     @staticmethod
-    def _expectation_aggs(exps: list[ExpectationDef]):
+    def _observed(
+        df: DataFrame, exps: list[ExpectationDef], exp_obs, rows_obs,
+        partition_by: list[str],
+    ) -> DataFrame:
+        """``df`` as written: expectation counters observed as ``exp_obs``
+        BEFORE the drop filters (failed == dropped by definition), the
+        rows written as ``rows_obs`` after them — both ride the write job
+        itself, zero extra scans — then routed to its partition tuples."""
         from pyspark.sql import functions as F
 
-        # a row VIOLATES when the condition is false or null — exactly the
-        # rows `WHERE condition` would remove, so drop-mode filtering and
-        # these counters can never disagree
-        aggs = [
-            F.sum(F.when(F.expr(e.condition), 0).otherwise(1)).cast("bigint").alias(e.name)
-            for e in exps
-        ]
-        aggs.append(F.count(F.lit(1)).cast("bigint").alias("__rows"))
-        return aggs
-
-    @staticmethod
-    def _apply_drops(df: DataFrame, exps: list[ExpectationDef]) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        for e in exps:
-            if e.action == "drop":
-                df = df.filter(F.expr(e.condition))
+        if exps:
+            # a row VIOLATES when the condition is false or null — exactly
+            # the rows `WHERE condition` would remove, so drop-mode
+            # filtering and these counters can never disagree
+            df = df.observe(
+                exp_obs,
+                *[
+                    F.sum(F.when(F.expr(e.condition), 0).otherwise(1))
+                    .cast("bigint").alias(e.name)
+                    for e in exps
+                ],
+                F.count(F.lit(1)).cast("bigint").alias("__rows"),
+            )
+            for e in exps:
+                if e.action == "drop":
+                    df = df.filter(F.expr(e.condition))
+        df = df.observe(rows_obs, F.count(F.lit(1)).cast("bigint").alias("n"))
+        if partition_by:
+            # route rows to their partition tuple BEFORE the partitioned
+            # sink: without this every sink task writes one file per
+            # tuple it sees (tasks x tuples — measured 62k files for
+            # 100k rows at 32 tasks x ~3000 (store, day) tuples in the
+            # r11 decade), and at 20M events the commit drowns in file
+            # metadata. One extra hash shuffle bounds files to ~#tuples.
+            df = df.repartition(*partition_by)
         return df
 
-    def _record_metrics(self, table: str, exps: list[ExpectationDef], row) -> dict[str, dict]:
-        rows = int(row["__rows"] or 0)
+    def _record_metrics(self, table: str, exps: list[ExpectationDef], row: dict) -> None:
+        """Record one refresh's counts (``row``: violations per constraint
+        and ``__rows``); raise :class:`ExpectationFailed` when a fail-mode
+        constraint saw a violation."""
+        rows = int(row.get("__rows") or 0)
         metrics = {}
         for e in exps:
-            failed = int(row[e.name] or 0)
+            failed = int(row.get(e.name) or 0)
             metrics[e.name] = {
                 "action": e.action,
                 "condition": e.condition,
@@ -1459,42 +1568,34 @@ class PipelineRunner:
                 "failed": failed,
             }
         self.expectation_metrics[table] = metrics
-        events = os.path.join(self.p.storage, "_events")
-        os.makedirs(events, exist_ok=True)
-        with open(os.path.join(events, "expectations.jsonl"), "a") as f:
-            f.write(json.dumps({"ts": time.time(), "table": table, "expectations": metrics}) + "\n")
         for name, m in metrics.items():
             self.log.emit(
                 "expectation", table=table, name=name, action=m["action"],
                 passed=m["passed"], failed=m["failed"],
             )
-        return metrics
-
-    @staticmethod
-    def _fail_violations(metrics: dict[str, dict]) -> bool:
-        return any(m["failed"] for m in metrics.values() if m["action"] == "fail")
+        if any(m["failed"] for m in metrics.values() if m["action"] == "fail"):
+            raise ExpectationFailed(table, metrics)
 
     def _write_live(self, df: DataFrame, t: TableDef) -> int:
         from pyspark.sql import Observation
-        from pyspark.sql import functions as F
 
         exps = t.expectations
-        obs = None
-        if exps:
-            obs = Observation()
-            # observe BEFORE drop filters: failed == dropped by definition
-            df = df.observe(obs, *self._expectation_aggs(exps))
-            df = self._apply_drops(df, exps)
-        # rows_written rides the SAME write job (post-drop count) — the
-        # event-log entry costs zero extra scans
-        out_obs = Observation()
-        df = df.observe(out_obs, F.count(F.lit(1)).cast("bigint").alias("n"))
-        if t.partition_by:
-            # same tuple-routing as the stream sink (see _run_stream):
-            # bound output files to ~#partition tuples, not tasks x tuples
-            df = df.repartition(*t.partition_by)
+        obs, out_obs = Observation(), Observation()
+        df = self._observed(df, exps, obs, out_obs, t.partition_by)
         if self.p.storage_format == "delta":
-            self._write_live_delta(df, t, obs)
+            # ONE atomic OVERWRITE commit: fail mode aborts BEFORE it via
+            # the writer's precommit hook, so the previous snapshot stays
+            # live (what the parquet __pending__/__old__ swap emulates)
+            from pos_dlt_spark.sources.delta_writer import write_delta
+
+            write_delta(
+                df, self.p.table_path(t.name), mode="overwrite",
+                partition_by=t.partition_by or None,
+                precommit=(
+                    (lambda: self._record_metrics(t.name, exps, obs.get))
+                    if exps else None
+                ),
+            )
             return int(out_obs.get["n"] or 0)
         final = self.p.table_path(t.name)
         has_fail = any(e.action == "fail" for e in exps)
@@ -1509,121 +1610,76 @@ class PipelineRunner:
             writer = writer.partitionBy(*t.partition_by)
         writer.parquet(dest)
         if exps:
-            metrics = self._record_metrics(t.name, exps, obs.get)
-            if has_fail:
-                if self._fail_violations(metrics):
-                    shutil.rmtree(dest, ignore_errors=True)
-                    raise ExpectationFailed(t.name, metrics)
-                old = final + ".__old__"
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                if os.path.exists(final):
-                    os.replace(final, old)
-                os.replace(dest, final)
-                shutil.rmtree(old, ignore_errors=True)
+            try:
+                self._record_metrics(t.name, exps, obs.get)
+            except ExpectationFailed:
+                shutil.rmtree(dest, ignore_errors=True)
+                raise
+        if has_fail:
+            old = final + ".__old__"
+            if os.path.exists(old):
+                shutil.rmtree(old)
+            if os.path.exists(final):
+                os.replace(final, old)
+            os.replace(dest, final)
+            shutil.rmtree(old, ignore_errors=True)
         return int(out_obs.get["n"] or 0)
 
-    def _write_live_delta(self, df: DataFrame, t: TableDef, obs) -> None:
-        """Live recompute as ONE atomic Delta OVERWRITE commit. Expectation
-        metrics ride the staging write job (observe), and fail-mode aborts
-        BEFORE the commit via the writer's precommit hook — the previous
-        snapshot stays live, no swap-dir choreography needed (this is what
-        the parquet mode's __pending__/__old__ dance emulates)."""
-        from pos_dlt_spark.sources.delta_writer import write_delta
+    def _run_flow(
+        self, df: DataFrame, label: str, checkpoint: str, path: str | None = None,
+        fmt: str | None = None, exps: list[ExpectationDef] = (),
+        partition_by: list[str] = (), shared: bool = False,
+        sink: Callable | None = None,
+    ) -> int:
+        """Run one streaming flow as an availableNow query named
+        ``pos_dlt:<pipeline>:<label>`` on ``checkpoint`` and return the
+        rows it wrote; the session's :class:`_FlowTotals` sums the
+        observed counts over every micro-batch. Fail mode on a stream is
+        detect-and-halt: committed micro-batches stay committed and the
+        pipeline stops before downstream tables consume them (use
+        expect_or_drop for containment).
 
-        exps = t.expectations
-
-        def precommit() -> None:
-            metrics = self._record_metrics(t.name, exps, obs.get)
-            if self._fail_violations(metrics):
-                raise ExpectationFailed(t.name, metrics)
-
-        write_delta(
-            df,
-            self.p.table_path(t.name),
-            mode="overwrite",
-            partition_by=t.partition_by or None,
-            precommit=precommit if exps else None,
-        )
-
-    def _run_stream_delta(self, df: DataFrame, t: TableDef):
-        """Stream table as per-micro-batch Delta APPEND commits.
-        Exactly-once: each batch commit carries a SetTransaction
-        (appId=pipeline/table, version=batch_id), so a foreachBatch replay
-        after a crash between sink-write and checkpoint-advance is skipped
-        by the writer instead of duplicating rows — the same idempotence
-        contract delta's own streaming sink implements."""
-        from pos_dlt_spark.sources.delta_writer import delta_stream_sink
-
-        path = self.p.table_path(t.name)
-        app_id = f"pos_dlt:{self.p.name}:{t.name}"
-        sink = delta_stream_sink(path, app_id, partition_by=t.partition_by or None)
-
-        return (
-            df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", self.p.checkpoint_path(t.name))
+        Sinks, each with its own exactly-once contract: ``sink`` when
+        given (a CDC flow's merge); Delta (``fmt``, default the pipeline's
+        storage format) commits each batch with a SetTransaction whose
+        appId is the query name, so a replay is skipped; a ``shared``
+        parquet path (several append flows, one location) appends per
+        batch, at-least-once like any log-less file sink; a parquet
+        stream table uses Spark's file sink, whose ``_spark_metadata``
+        log gives readers exactly-once."""
+        flow_id = _FLOW_PREFIX + f"{self.p.name}:{label}"
+        df = self._observed(df, exps, _EXP_OBS, _ROWS_OBS, partition_by)
+        writer = (
+            df.writeStream.queryName(flow_id)
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
-            .start()
         )
+        if sink is None and (fmt or self.p.storage_format) == "delta":
+            from pos_dlt_spark.sources.delta_writer import delta_stream_sink
 
-    def _run_stream(self, df: DataFrame, t: TableDef) -> int:
-        from pyspark.sql import functions as F
+            sink = delta_stream_sink(path, flow_id, partition_by=partition_by or None)
+        elif sink is None and shared:
+            def sink(batch_df: DataFrame, batch_id: int) -> None:
+                w = batch_df.write.mode("append")
+                if partition_by:
+                    w = w.partitionBy(*partition_by)
+                w.parquet(path)
 
-        exps = t.expectations
-        obs_name = f"__expectations_{t.name}"
-        if exps:
-            # streaming observe: per-micro-batch metric rows surface in
-            # StreamingQueryProgress.observedMetrics; totals are the sum
-            df = df.observe(obs_name, *self._expectation_aggs(exps))
-            df = self._apply_drops(df, exps)
-        out_name = f"__rows_out_{t.name}"
-        df = df.observe(out_name, F.count(F.lit(1)).cast("bigint").alias("n"))
-        if t.partition_by:
-            # route rows to their partition tuple BEFORE the partitioned
-            # sink: without this every sink task writes one file per
-            # tuple it sees (tasks x tuples — measured 62k files for
-            # 100k rows at 32 tasks x ~3000 (store, day) tuples in the
-            # r11 decade), and at 20M events the commit drowns in file
-            # metadata. One extra hash shuffle bounds files to ~#tuples.
-            df = df.repartition(*t.partition_by)
-        if self.p.storage_format == "delta":
-            q = self._run_stream_delta(df, t)
+        if sink is not None:
+            writer = writer.foreachBatch(sink)
         else:
-            writer = (
-                df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", self.p.table_path(t.name))
-                .option("checkpointLocation", self.p.checkpoint_path(t.name))
-                .trigger(availableNow=True)
-            )
-            if t.partition_by:
-                writer = writer.partitionBy(*t.partition_by)
-            q = writer.start()
-        q.awaitTermination()
-        rows_out = 0
-        for prog in q.recentProgress:
-            om = getattr(prog, "observedMetrics", None) or {}
-            row = om.get(out_name)
-            if row is not None:
-                rows_out += int(row["n"] or 0)
+            writer = writer.format("parquet").option("path", path)
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+        listener = _flow_totals(df.sparkSession)
+        q = writer.start()
+        try:
+            q.awaitTermination()
+        finally:
+            totals = listener.take(q.id)
         if exps:
-            totals = {e.name: 0 for e in exps}
-            totals["__rows"] = 0
-            for prog in q.recentProgress:
-                om = getattr(prog, "observedMetrics", None) or {}
-                row = om.get(obs_name)
-                if row is None:
-                    continue
-                for k in totals:
-                    totals[k] += int(row[k] or 0)
-            metrics = self._record_metrics(t.name, exps, totals)
-            if self._fail_violations(metrics):
-                # parquet micro-batches already committed stay committed —
-                # fail-mode on a stream is detect-and-halt (stop the
-                # pipeline before downstream tables consume the batch),
-                # not a rollback; use expect_or_drop for containment
-                raise ExpectationFailed(t.name, metrics)
-        return rows_out
+            self._record_metrics(label, exps, totals.get(_EXP_OBS, {}))
+        return totals.get(_ROWS_OBS, {}).get("n", 0)
 
     def _flow_ac(self, flow: CdcFlowDef) -> ApplyChanges:
         return ApplyChanges(
@@ -1647,19 +1703,12 @@ class PipelineRunner:
     def _run_append_flows(self, spark: SparkSession, name: str) -> int:
         """Refresh a multi-flow streaming target (create_streaming_table)
         or an external sink: run each of its append flows under that
-        flow's OWN checkpoint, appending into the shared location.
-
-        Exactly-once: in delta format each flow commits with its own
-        SetTransaction appId (pipeline:target:flow), so batch replays
-        after a crash are no-ops per flow. Parquet targets append
-        per-batch files without a transaction log — a crash between
-        sink-write and checkpoint-advance can replay one batch
-        (at-least-once), the same contract as any log-less file sink.
+        flow's OWN checkpoint, appending into the shared location (each
+        flow is its own ``_run_flow`` label ``target:flow``, so in delta
+        format its own SetTransaction appId).
         ``once`` flows are skipped as soon as their checkpoint shows a
         committed batch (DLT's backfill contract; a full refresh clears
         the checkpoint and re-arms them)."""
-        from pyspark.sql import functions as F
-
         sink_def = self.p.sinks.get(name)
         if sink_def is not None:
             t = TableDef(name=name, fn=None, kind="stream")  # type: ignore[arg-type]
@@ -1690,54 +1739,10 @@ class PipelineRunner:
                 df = flow.fn(spark)
             finally:
                 self.p._current = None
-            exps = t.expectations
-            obs_name = f"__expectations_{name}_{flow.name}"
-            if exps:
-                df = df.observe(obs_name, *self._expectation_aggs(exps))
-                df = self._apply_drops(df, exps)
-            out_name = f"__rows_out_{name}_{flow.name}"
-            df = df.observe(out_name, F.count(F.lit(1)).cast("bigint").alias("n"))
-            if t.partition_by:
-                df = df.repartition(*t.partition_by)
-            if fmt == "delta":
-                from pos_dlt_spark.sources.delta_writer import delta_stream_sink
-
-                app_id = f"pos_dlt:{self.p.name}:{name}:{flow.name}"
-                sink = delta_stream_sink(
-                    path, app_id, partition_by=t.partition_by or None
-                )
-            else:
-                def sink(batch_df, batch_id, _p=path, _pb=t.partition_by):
-                    w = batch_df.write.mode("append")
-                    if _pb:
-                        w = w.partitionBy(*_pb)
-                    w.parquet(_p)
-
-            q = (
-                df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            rows = self._run_flow(
+                df, f"{name}:{flow.name}", ckpt, path, fmt,
+                exps=t.expectations, partition_by=t.partition_by, shared=True,
             )
-            q.awaitTermination()
-            rows = 0
-            exp_totals = {e.name: 0 for e in exps}
-            exp_totals["__rows"] = 0
-            for prog in q.recentProgress:
-                om = getattr(prog, "observedMetrics", None) or {}
-                row = om.get(out_name)
-                if row is not None:
-                    rows += int(row["n"] or 0)
-                erow = om.get(obs_name)
-                if erow is not None:
-                    for k in exp_totals:
-                        exp_totals[k] += int(erow[k] or 0)
-            if exps:
-                metrics = self._record_metrics(
-                    f"{name}:{flow.name}", exps, exp_totals
-                )
-                if self._fail_violations(metrics):
-                    raise ExpectationFailed(f"{name}:{flow.name}", metrics)
             self.log.emit(
                 "flow_progress", table=name, flow=flow.name, rows_written=rows
             )
@@ -1796,6 +1801,9 @@ class PipelineRunner:
         return {"snapshot_version": int(version), "processed": bool(processed)}
 
     def _run_cdc(self, spark: SparkSession, flow: CdcFlowDef) -> dict:
+        # Delta targets commit under the flow's query name as appId
+        path = self.p.table_path(flow.target)
+        app_id = _FLOW_PREFIX + f"{self.p.name}:{flow.target}"
         if (
             self.p.storage_format == "delta"
             and flow.n_buckets is None
@@ -1813,9 +1821,6 @@ class PipelineRunner:
             # makes batch replays no-ops.
             from pos_dlt_spark.operators.cdc import SCD2_COLS, scd2_rebuild
             from pos_dlt_spark.sources.delta_writer import delta_merge, write_delta
-
-            path = self.p.table_path(flow.target)
-            app_id = f"pos_dlt:{self.p.name}:{flow.target}"
 
             def scd2_sink(batch_df: DataFrame, batch_id: int) -> None:
                 from pyspark.sql import functions as F
@@ -1922,9 +1927,6 @@ class PipelineRunner:
             from pos_dlt_spark.operators.cdc import latest_per_key
             from pos_dlt_spark.sources.delta_writer import delta_merge, write_delta
 
-            path = self.p.table_path(flow.target)
-            app_id = f"pos_dlt:{self.p.name}:{flow.target}"
-
             def sink(batch_df: DataFrame, batch_id: int) -> None:
                 from pyspark.sql import functions as F
 
@@ -1986,10 +1988,6 @@ class PipelineRunner:
         inner_fn = batch_fn
 
         def counted(batch_df: DataFrame, batch_id: int) -> None:
-            from pyspark.sql import functions as F
-
-            from pos_dlt_spark.operators.cdc import latest_per_key
-
             # One source scan per micro-batch: the sink AND the counters
             # both consume batch_df, so without the cache the counters
             # would re-execute the source read/parse (and re-evaluate
@@ -2001,14 +1999,10 @@ class PipelineRunner:
             finally:
                 batch_df.unpersist()
 
-        src = self.p.read_stream(spark, flow.source)
-        q = (
-            src.writeStream.foreachBatch(counted)
-            .option("checkpointLocation", self.p.checkpoint_path(flow.target))
-            .trigger(availableNow=True)
-            .start()
+        self._run_flow(
+            self.p.read_stream(spark, flow.source), flow.target,
+            self.p.checkpoint_path(flow.target), sink=counted,
         )
-        q.awaitTermination()
         return stats
 
     def _count_batch(self, batch_df, batch_id, flow, inner_fn, stats) -> None:
@@ -2100,7 +2094,10 @@ class PipelineRunner:
         if t.kind == "live":
             rows = self._write_live(df, t)
         else:
-            rows = self._run_stream(df, t)
+            rows = self._run_flow(
+                df, name, self.p.checkpoint_path(name), self.p.table_path(name),
+                exps=t.expectations, partition_by=t.partition_by,
+            )
         self.log.emit("flow_complete", table=name, rows_written=rows)
 
     # -- full refresh (DLT pipelines.reset.allowed) ------------------------

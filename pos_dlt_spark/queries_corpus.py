@@ -23,21 +23,6 @@ from pos_dlt_spark.queries_ml import _HSH_CTE, _SH_CTE, _TOKS_CTE
 from pos_dlt_spark.tables import load_table
 
 
-def _checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
-    """Eagerly localCheckpoint several INDEPENDENT DataFrames from a small
-    thread pool so their jobs overlap on the cluster (guide §2.6): a
-    sequential chain of eager checkpoints serializes the critical path —
-    each materialization waits for the previous one even though none
-    depends on it — while concurrent submission lets the scheduler
-    back-fill each job's straggler tail with the next job's tasks.
-    Actions are thread-safe on a shared SparkSession."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=True)]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return list(pool.map(lambda d: d.localCheckpoint(eager=True), dfs))
-
 def stage_profiles(
     docs: DataFrame, n_hashes: int, shingle_n: int
 ) -> DataFrame:

@@ -4578,12 +4578,18 @@ def delta_stream_sink(path: str, app_id: str, partition_by: list[str] | None = N
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        write_delta(
-            batch_df, path, mode="append", partition_by=partition_by,
-            txn=(app_id, int(batch_id)),
-        )
+        # the emptiness probe and the write share ONE computation of the
+        # batch: a recomputed micro-batch would also count twice in any
+        # DataFrame.observe metrics of the streaming plan
+        batch_df.persist()
+        try:
+            if batch_df.take(1):
+                write_delta(
+                    batch_df, path, mode="append", partition_by=partition_by,
+                    txn=(app_id, int(batch_id)),
+                )
+        finally:
+            batch_df.unpersist()
 
     return sink
 

@@ -112,15 +112,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def scratch_dir(prefix: str) -> str:
     """Session-lifetime scratch directory for stream landings, replay
     files, and checkpoints: prefers tmpfs (``/dev/shm``) when present —

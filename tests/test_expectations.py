@@ -123,11 +123,14 @@ def test_event_log_written(spark, tmp_path):
 
     runner = PipelineRunner(pipe)
     runner.run_once(spark)
-    log = os.path.join(str(tmp_path), "_events", "expectations.jsonl")
-    events = [json.loads(line) for line in open(log)]
-    assert events[-1]["table"] == "tbl"
-    assert events[-1]["expectations"]["b_pos"]["failed"] == 1
-    assert events[-1]["expectations"]["a_pos"]["failed"] == 0
+    events = {
+        d["name"]: d
+        for r in pipe.event_log(spark).collect()
+        if r["event_type"] == "expectation" and r["table_name"] == "tbl"
+        for d in [json.loads(r["details"])]
+    }
+    assert events["b_pos"]["failed"] == 1
+    assert events["a_pos"]["failed"] == 0
 
 
 def test_expect_or_fail_aborts_atomically_delta_mode(spark, tmp_path):

@@ -41,8 +41,9 @@ def test_sql_json_arr_rejects_quotes():
     from pos_dlt_spark.operators.similarity import _sql_json_arr
 
     assert "from_json" in _sql_json_arr([[1, 2], [3, 4]], "array<array<bigint>>")
-    with pytest.raises(AssertionError):
-        _sql_json_arr(["a'b"], "array<string>")
+    for bad in ["a'b", "a\\b"]:
+        with pytest.raises(ValueError):
+            _sql_json_arr([bad], "array<string>")
 
 
 def test_huff_lut_cache_bounded():
